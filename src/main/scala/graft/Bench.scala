@@ -12,9 +12,8 @@ object Bench {
     * HLL sketch vanished, 0.56s vs 4.4s real), and a row-preserving
     * final left join against aggregated-unique keys disappears
     * entirely (x46/x47: flat 0.3s from 5k to 500k docs). The
-    * count-vs-materialize audit (tools/CountHonesty, SCALE.md
-    * round-14) found 18 of 109 queries over 2x hollow, ~17s of elided
-    * work at sf0.1.
+    * count-vs-materialize audit (SCALE.md round-14) found 18 of 109
+    * queries over 2x hollow, ~17s of elided work at sf0.1.
     */
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.toRdd.foreach(_ => ())

@@ -25,12 +25,13 @@ object Cli {
       val run = Engine.forDirectory(spark, dir)
       println(ResultFormatter.render(run(query)))
     } catch {
+      // ParseException extends AnalysisException, so it must match first
+      case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+        System.err.println(s"parse error: ${e.getMessage.trim.linesIterator.next()}")
+        sys.exit(3)
       case e: org.apache.spark.sql.AnalysisException =>
         System.err.println(s"error: ${e.getSimpleMessage}")
         sys.exit(2)
-      case e: org.apache.spark.sql.catalyst.parser.ParseException =>
-        System.err.println(s"parse error: ${e.getMessage.linesIterator.next()}")
-        sys.exit(3)
     } finally spark.stop()
   }
 }

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   *    duplicate-heavy boilerplate (each doc one phrase repeated 50x,
   *    ~50x intra-doc gram duplication) the old two-exchange shape,
   *    whose first exchange shipped deduped rows, edges ahead ~10%
-  *    (Scale10 `boilergrams`: 2.11s vs 2.34s), while on the real
+  *    (SCALE.md round-9 `boilergrams`: 2.11s vs 2.34s), while on the real
   *    corpus the one-exchange shape stays ahead (0.85s vs 0.89s) —
   *    the single exchange stays: real corpora are the target and a
   *    ~10% corner penalty does not buy back an exchange.

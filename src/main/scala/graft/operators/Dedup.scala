@@ -187,8 +187,9 @@ object Dedup {
   }
 
   /** The banded (id, band, bhash) frame minhashCandidates buckets on —
-    * factored out so the stage profiler (tools.Prof) measures the exact
-    * shape the engine runs rather than a hand-copied twin.
+    * factored out so the index, ingest and streaming paths (and their
+    * specs) band with the exact shape the engine runs rather than a
+    * hand-copied twin.
     */
   private[graft] def bandedFrame(
       docs: DataFrame, idCol: String, textCol: String,

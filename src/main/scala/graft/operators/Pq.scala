@@ -312,7 +312,7 @@ object Pq {
     * (ivfAssign's nearest_centroid + the m subspace natives) that
     * production runs once at ingest, persisted bucketed by cell so
     * every later search's probe join prunes physically. ivfPqTopK
-    * builds it inline for the self-contained form; Scale10's search
+    * builds it inline for the self-contained form; the measured search
     * decade checkpoints it first, because re-deriving the O(nlist·dim)
     * assignment per query batch measurably dominated search wall at
     * the ×100 slice (the build-vs-search split is the measurement, see

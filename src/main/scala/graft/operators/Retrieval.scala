@@ -55,7 +55,7 @@ object Retrieval {
     * sim) with ivfTopK's contract: 6-decimal sim, ties by id, self
     * excluded; a true neighbor in an unprobed cell is missed — the
     * standard IVF recall/cost dial, measured against brute force in
-    * RetrievalSpec and the scale flows.
+    * RetrievalSpec and SCALE.md round-20.
     *
     * Missing/dropped query ids yield NO output rows (ADVICE r20): an
     * id absent from the corpus, or whose document was dropped by
@@ -64,7 +64,7 @@ object Retrieval {
     * per-id existence probe here, because it would cost a corpus-sized
     * action per call on the hot retrieval path. Callers needing the
     * distinction compare output qids against their request list (the
-    * Scale10 recall flows score such ids as 0 deliberately).
+    * SCALE.md round-20 recall numbers score such ids as 0 deliberately).
     */
   def moreLikeThis(docs: DataFrame, idCol: String, textCol: String,
       queryIds: Seq[Long], dim: Int, centroidStride: Int,

@@ -440,7 +440,7 @@ object Similarity {
     * |cell|²·nprobe/nlist of the all-pairs square. Approximate exactly
     * like IVF search (a true nearest neighbor in an unprobed cell is
     * missed — the same recall/cost dial as ivfTopK, measured against
-    * the exact form in the scale flows).
+    * the exact form in SCALE.md).
     *
     * Output contract difference from the exact form: a vector whose
     * probed cells contain NO other vector (alone in its cell, other
@@ -608,8 +608,8 @@ object Similarity {
     * measured masses are ~63 (sf0.001/0.01) to 250 (sf0.1) candidate
     * pairs per row at (4,4) vs ~8-31 at (8,8), so the default budget of
     * 48 rejects (4,4) and lands on (8,8) at every graded SF
-    * (SimilaritySpec pins it). On the Scale10 x10 slice the measured
-    * masses are 2499/row at (4,4) and 312/row at (8,8) — cross-replica
+    * (SimilaritySpec pins it). On the x10 replica slice (SCALE.md
+    * round-8) the measured masses are 2499/row at (4,4) and 312/row at (8,8) — cross-replica
     * sign noise collides 8-bit bands by chance at 20k rows — and the
     * probe steps down to (4,16) at 0.6/row: the budget reacts to
     * measured concentration instead of trusting a static default, which

@@ -1586,7 +1586,7 @@ object PipelineOps {
     // its real job is keeping a bare count() honest: without a
     // reference to the COMPUTED column, the optimizer elides the
     // row-preserving final left join and "benchmarks" a corpus scan
-    // (measured: flat 0.3s from 5k to 500k docs in the Scale10 flow)
+    // (measured: flat 0.3s from 5k to 500k docs, SCALE.md round-14)
     (s, d) => LmQuality.bigramLogLikelihood(
       t(s, d, "documents"), "doc_id", "text")
       .filter(col("avg_ll") <= 0.0).orderBy("doc_id"),
@@ -1864,7 +1864,7 @@ object PipelineOps {
     * cluster-purity probe over the embedded eval set. Exact brute-force
     * at the graded SF (the oracle replays the all-pairs square); the
     * corpus-scale path is the IVF-cell-blocked variant, measured
-    * against this exact form in the scale flows.
+    * against this exact form in SCALE.md.
     */
   private val x54 = Q(
     "x54_knn_label_agree",

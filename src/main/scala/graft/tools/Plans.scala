@@ -1,15 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 
-/** Physical-plan introspection shared by the scale flows and their CI
-  * spec: walks the FINAL adaptive plan structurally — `plan.collect`
-  * alone stops at AdaptiveSparkPlanExec/QueryStageExec boundaries (both
-  * are leaf-like wrappers), and string-matching a plan dump is
-  * formatting-dependent. Same traversal PlanSpec uses.
+/** Physical-plan introspection shared by the specs: walks the FINAL
+  * adaptive plan structurally — `plan.collect` alone stops at
+  * AdaptiveSparkPlanExec/QueryStageExec boundaries (both are leaf-like
+  * wrappers), and string-matching a plan dump is formatting-dependent.
   */
 object Plans {
 
@@ -18,14 +16,4 @@ object Plans {
     case s: QueryStageExec => s +: deepNodes(s.plan)
     case other => other +: other.children.flatMap(deepNodes)
   }
-
-  /** Simple-name counts of every join operator in the final plan of an
-    * EXECUTED DataFrame (run an action first — AQE finalizes strategies
-    * at runtime), e.g. Map("BroadcastHashJoinExec" -> 2) — the "which
-    * joins changed strategy at ×10" signal the tpch10 flow records.
-    */
-  def joinStrategies(df: DataFrame): Map[String, Int] =
-    deepNodes(df.queryExecution.executedPlan)
-      .map(_.getClass.getSimpleName).filter(_.contains("Join"))
-      .groupBy(identity).view.mapValues(_.size).toMap
 }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 
+import graft.tools.Plans.deepNodes
+
 /** Physical-plan assertions: correctness tests prove the small-SF result;
   * these prove the plan SHAPE survives a 1000x scale-up. Each assertion
   * encodes a property that, if lost by a refactor, would silently turn a
@@ -299,22 +301,6 @@ class PlanSpec extends SparkTestBase {
       s"event window lost the chunk key: ${w.partitionSpec}"))
   }
 
-  /** Every node of the FINAL physical plan, descending structurally
-    * into AQE's replanned tree and into materialized query stages —
-    * `plan.collect` alone stops at AdaptiveSparkPlanExec/QueryStageExec
-    * boundaries (both are leaf-like wrappers), and string-matching the
-    * plan dump is version-dependent formatting that could go vacuous on
-    * a Spark upgrade.
-    */
-  private def deepNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      a +: deepNodes(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      s +: deepNodes(s.plan)
-    case other => other +: other.children.flatMap(deepNodes)
-  }
-
   test("x25: AQE reuses the vocab-count exchange across the rank/size/" +
     "offset branches (the corpus explode+agg runs once, not 3x)") {
     // stage reuse is finalized only at runtime -> execute, then walk the
@@ -489,7 +475,7 @@ class PlanSpec extends SparkTestBase {
     "WORD-level (split+array ops, linear per doc), not shingled") {
     import graft.functions._
     def nativesOf(df: DataFrame): Set[String] =
-      graft.tools.Plans.deepNodes(df.queryExecution.executedPlan)
+      deepNodes(df.queryExecution.executedPlan)
         .flatMap(_.expressions.flatMap(_.collect {
           case e @ (_: WordShingles | _: RollingHash31 | _: CharNgrams |
             _: ShingleHashSet | _: MinHashSignature | _: CharSplit |

@@ -8,7 +8,8 @@ import graft.SparkTestBase
   * /root/reference — see SURVEY.md §2 and FIXTURES.md) plus the
   * deliberate deviations of SURVEY.md §7.5, each asserted here.
   * Fixtures are read from the live reference CSVs at runtime (read-only);
-  * tests cancel cleanly if the reference tree is absent.
+  * tests cancel cleanly if the reference tree is absent. Deviations 5
+  * and 7 check only analysis errors, so they run on an inline catalog.
   */
 class EngineSpec extends SparkTestBase {
 
@@ -20,6 +21,25 @@ class EngineSpec extends SparkTestBase {
   private lazy val run: String => org.apache.spark.sql.DataFrame = {
     withRef()
     Engine.forDirectory(spark, refDir)
+  }
+
+  /** An inline table1(A,B,C) / table2(B,D) catalog for checks that need
+    * the reference's table shapes but not its values. Registered in its
+    * own session, so its views never shadow the reference's.
+    */
+  private lazy val runSynthetic: String => org.apache.spark.sql.DataFrame = {
+    val dir = Files.createTempDirectory("graftsyn").toFile
+    dir.deleteOnExit()
+    def write(name: String, body: String): Unit = {
+      val f = new java.io.File(dir, name)
+      f.deleteOnExit()
+      Files.writeString(f.toPath, body)
+    }
+    write("metadata.txt", "<begin_table>\ntable1\nA\nB\nC\n<end_table>\n" +
+      "<begin_table>\ntable2\nB\nD\n<end_table>\n")
+    write("table1.csv", "922,158,1318\n-5,773,9000\n")
+    write("table2.csv", "158,\"11191\"\n773,14421\n")
+    Engine.forDirectory(spark.newSession(), dir.getAbsolutePath)
   }
 
   test("catalog parses metadata.txt blocks in order") {
@@ -136,7 +156,7 @@ class EngineSpec extends SparkTestBase {
   test("deviation 5: ambiguous unqualified column raises, not fan-out") {
     // reference [verified]: `select B from table1, table2` -> BOTH B columns
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      run("select B from table1, table2").collect()
+      runSynthetic("select B from table1, table2").collect()
     }
     assert(e.getMessage.contains("AMBIGUOUS"))
   }
@@ -149,7 +169,7 @@ class EngineSpec extends SparkTestBase {
 
   test("deviation 7: unknown column is an error, not silent emptiness") {
     intercept[org.apache.spark.sql.AnalysisException] {
-      run("select NOPE from table1").collect()
+      runSynthetic("select NOPE from table1").collect()
     }
   }
 

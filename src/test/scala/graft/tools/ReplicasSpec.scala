@@ -1,22 +1,21 @@
 package graft.tools
 
 import graft.SparkTestBase
-import graft.operators.{AsOfJoin, Dedup, IntervalJoin, Sessionize, Similarity}
+import graft.operators.{AsOfJoin, Components, Dedup, IntervalJoin,
+  Sessionize, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** CI promotion of the Scale10 decade invariants (VERDICT r8 task 1):
-  * the headline SCALE.md claims — near-dup pairs never cross replicas
-  * and scale exactly N×, event-tier outputs scale exactly N×, the probe
-  * never gets LESS selective as concentration grows — were previously
-  * verified only when someone ran tools/Scale10 by hand, so a plan or
-  * operator regression that broke a decade claim would ship green. This
-  * suite rebuilds the same replica structure at reps=3 over sf0.001
-  * (1,500 docs / 1,500 vectors / ~3,000 events — small enough for the
-  * test budget) and asserts the OUTPUT invariants. No wall-time asserts:
-  * timing lives in Scale10/SCALE.md, invariants live here.
+/** The replica invariants behind SCALE.md's decade claims: near-dup
+  * pairs never cross replicas and scale exactly N×, event-tier outputs
+  * scale exactly N×, the probe never gets LESS selective as
+  * concentration grows. This suite builds the replica structure at
+  * reps=3 over sf0.001 (1,500 docs / 1,500 vectors / ~3,000 events —
+  * small enough for the test budget) and asserts the OUTPUT invariants,
+  * so a plan or operator regression that broke a decade claim fails
+  * here. No wall-time asserts: the measured timings live in SCALE.md.
   */
-class Scale10Spec extends SparkTestBase {
+class ReplicasSpec extends SparkTestBase {
 
   private val R = 3
 
@@ -85,6 +84,28 @@ class Scale10Spec extends SparkTestBase {
     }
   }
 
+  // The end-to-end corpus clean whose cluster census SCALE.md round 13
+  // measured: exact-dedup on normalized text, MinHash near-dup pairs,
+  // connected components, one row per cluster.
+  private def corpusCleanCensus(docs: DataFrame): DataFrame = {
+    val normed = docs.select(col("doc_id"), col("text"),
+      TextAnalysis.normalize(col("text")).as("ntext"))
+    val keepIds = normed.groupBy(md5(col("ntext")).as("digest"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id")
+    val kept = normed.join(keepIds, Seq("doc_id")).localCheckpoint()
+    val pairs = Dedup.minhashNearDups(kept, "doc_id", "text", 0.6)
+      .select(col("id_a").as("a"), col("id_b").as("b"))
+    // materialize the census before freeing kept's blocks, so the
+    // unpersist does not depend on minLabel checkpointing eagerly
+    val census = Components
+      .minLabel(kept.select(col("doc_id").as("id")), pairs)
+      .groupBy("cluster").agg(count(lit(1)).as("members"))
+      .localCheckpoint()
+    kept.unpersist()
+    census
+  }
+
   test("corpus pipeline census: replica 0 equals the base census " +
     "row-for-row; other replicas match within banding tolerance; no " +
     "cluster crosses replicas") {
@@ -95,9 +116,9 @@ class Scale10Spec extends SparkTestBase {
     // under the token rename, so banding may shift borderline pairs
     // (same +-tolerance the pair test above uses), moving a few docs
     // between clusters.
-    val base = Scale10.corpusCleanCensus(docs)
+    val base = corpusCleanCensus(docs)
       .collect().map(_.toSeq).toSet
-    val rep = Scale10.corpusCleanCensus(Replicas.documents(docs, R))
+    val rep = corpusCleanCensus(Replicas.documents(docs, R))
       .collect()
     // every cluster label lives in exactly one replica's id range, and
     // its member count never exceeds that replica's doc count — a
